@@ -6,8 +6,13 @@ so resume decisions are stable across runs/cluster sizes. Buckets are
 processed in chunks; after each chunk's spans land (dynamic partition
 overwrite => idempotent re-runs), its lineage rows
 ``(partition_id, input_count, output_count, checksum)`` are appended.
-Resume anti-joins the input against committed lineage and recomputes
-only missing buckets.
+The output side of a lineage row is computed from the chunk's
+partitions as read back from the written output, so it certifies what
+landed on disk, and extraction runs once per chunk (the write), never
+again for the lineage. Every bucket of a chunk commits a row: a bucket
+with no docs commits ``(b, 0, 0, "0")``, so a finished run re-runs as a
+no-op. Resume anti-joins the input against committed lineage and
+recomputes only missing buckets.
 
 At 10^12 docs you would raise ``n_buckets`` to O(10^3-10^4) and
 ``chunk_buckets`` to the cluster's comfortable job size; the driver
@@ -23,9 +28,11 @@ from typing import TYPE_CHECKING
 
 from html_to_document_spark.core.extract import DEFAULT_OPTIONS, ExtractOptions
 from html_to_document_spark.operators.extract_spans import extract_spans
+from html_to_document_spark.operators.parallelism import literal_frame
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql.types import StructType
 
 LINEAGE_SCHEMA = (
     "partition_id int, input_count bigint, output_count bigint, checksum string"
@@ -41,22 +48,49 @@ def with_bucket_id(df: "DataFrame", n_buckets: int) -> "DataFrame":
     )
 
 
-def lineage_of(in_df: "DataFrame", out_df: "DataFrame") -> "DataFrame":
-    """Per-bucket lineage; both frames must carry ``partition_id``."""
+def span_totals(out_df: "DataFrame", key: str = "partition_id") -> "DataFrame":
+    """Per-``key`` ``(partition_id, doc_out, output_count, checksum)`` of
+    an extracted-spans frame: docs, spans, and the checksum. The one
+    definition shared by the batch (bucket) and streaming (micro-batch)
+    lineage writers."""
     from pyspark.sql import functions as F
 
-    inp = in_df.groupBy("partition_id").agg(
-        F.count("*").alias("input_count")
-    )
-    outp = out_df.groupBy("partition_id").agg(
+    return out_df.groupBy(F.col(key).alias("partition_id")).agg(
         F.count("*").alias("doc_out"),
         F.sum(F.size("spans")).alias("output_count"),
         F.conv(
             F.expr("bit_xor(xxhash64(doc_id, to_json(spans)))"), 10, 16
         ).alias("checksum"),
     )
+
+
+def lineage_of(
+    in_df: "DataFrame",
+    out_df: "DataFrame",
+    buckets: list[int] | None = None,
+) -> "DataFrame":
+    """Per-bucket lineage; both frames must carry ``partition_id``.
+
+    With ``buckets``, each listed bucket gets a row even when ``in_df``
+    has no docs in it: ``(b, 0, 0, "0")``."""
+    from pyspark.sql import functions as F
+
+    inp = in_df.groupBy("partition_id").agg(
+        F.count("*").alias("input_count")
+    )
+    if buckets is not None:
+        inp = (
+            literal_frame(
+                in_df.sparkSession, [(b,) for b in buckets], "partition_id int"
+            )
+            .join(inp, "partition_id", "left")
+            .select(
+                "partition_id",
+                F.coalesce("input_count", F.lit(0)).alias("input_count"),
+            )
+        )
     return (
-        inp.join(outp, "partition_id", "left")
+        inp.join(span_totals(out_df), "partition_id", "left")
         .select(
             "partition_id",
             "input_count",
@@ -91,6 +125,30 @@ def _hadoop_touch(spark: "SparkSession", path: str) -> None:
     fs.create(p, True).close()
 
 
+def read_partitions(
+    spark: "SparkSession",
+    base: str,
+    column: str,
+    values: list[int],
+    schema: "StructType",
+) -> "DataFrame":
+    """Rows of ``base``'s ``<column>=<v>`` directories for ``values``,
+    read with ``schema`` (the written frame's, so no footer inference).
+
+    Explicit per-directory paths, so the scan lists only those files.
+    A partition with no rows has no directory, and ``base`` itself may
+    not exist yet: missing directories are skipped, and when none
+    exists the result is an empty frame."""
+    paths = [
+        p for p in (f"{base}/{column}={v}" for v in values)
+        if _hadoop_path_exists(spark, p)
+    ]
+    reader = spark.read.schema(schema)
+    if not paths:  # basePath is rejected without paths
+        return reader.parquet()
+    return reader.option("basePath", base).parquet(*paths)
+
+
 def run_with_checkpoint(
     spark: "SparkSession",
     input_df: "DataFrame",
@@ -113,6 +171,12 @@ def run_with_checkpoint(
     artifact: an existing staged dir is reused, not rewritten), and each
     chunk reads ONLY its own partition directories — scan bytes per
     chunk are chunk-sized by construction, not by optimizer goodwill.
+
+    Each chunk runs the extraction once: its spans are written, then
+    its lineage rows are computed from the chunk's partitions read back
+    from ``out_path``. A bucket with no docs (no staged directory, no
+    output directory) is skipped by both reads and commits a
+    ``(b, 0, 0, "0")`` lineage row.
 
     ``fail_buckets`` injects a task failure when a chunk containing one
     of those buckets is processed — integration-test hook for the
@@ -139,10 +203,8 @@ def run_with_checkpoint(
     for start in range(0, len(todo), chunk_buckets):
         chunk = todo[start : start + chunk_buckets]
         if stage_path is not None:
-            # explicit per-partition paths: pruning is structural, and
-            # the scan lists only chunk-bucket files
-            chunk_df = spark.read.option("basePath", stage_path).parquet(
-                *[f"{stage_path}/partition_id={b}" for b in chunk]
+            chunk_df = read_partitions(
+                spark, stage_path, "partition_id", chunk, df.schema
             )
         else:
             chunk_df = df.filter(F.col("partition_id").isin(chunk))
@@ -164,8 +226,11 @@ def run_with_checkpoint(
         out = with_bucket_id(extracted, n_buckets)
         out.write.mode("overwrite").partitionBy("partition_id").parquet(out_path)
 
+        written = read_partitions(
+            spark, out_path, "partition_id", chunk, out.schema
+        )
         lineage_of(
-            chunk_df.select("doc_id", "partition_id"), out
+            chunk_df.select("doc_id", "partition_id"), written, chunk
         ).write.mode("append").parquet(lineage_path)
         processed.extend(chunk)
 

@@ -13,6 +13,7 @@ from typing import TYPE_CHECKING
 
 from html_to_document_spark.core.extract import DEFAULT_OPTIONS, ExtractOptions
 from html_to_document_spark.operators.extract_spans import extract_spans
+from html_to_document_spark.operators.lineage import read_partitions, span_totals
 from html_to_document_spark.sources.synthetic import DOC_SCHEMA
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -35,7 +36,11 @@ def extract_stream(
 
 
 def make_sink(out_path: str, lineage_path: str | None = None):
-    """Idempotent foreachBatch sink (exposed for retry testing)."""
+    """Idempotent foreachBatch sink (exposed for retry testing).
+
+    The lineage row of a micro-batch is computed from its partition as
+    read back from ``out_path``, so each micro-batch is extracted once
+    (by the data write) and its lineage certifies what landed on disk."""
     from pyspark.sql import functions as F
 
     def sink(batch_df: "DataFrame", batch_id: int) -> None:
@@ -43,24 +48,25 @@ def make_sink(out_path: str, lineage_path: str | None = None):
         # REPLACE its own output, not append a second copy (ADVICE r1).
         # Partitioning by batch_id + dynamic partition overwrite makes
         # both the data and lineage writes idempotent per batch_id.
+        out = batch_df.withColumn("batch_id", F.lit(int(batch_id)))
         (
-            batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
+            out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(out_path)
         )
         if lineage_path:
+            written = read_partitions(
+                batch_df.sparkSession, out_path, "batch_id",
+                [int(batch_id)], out.schema,
+            )
             (
-                batch_df.groupBy(F.lit(int(batch_id)).alias("partition_id"))
-                .agg(
-                    F.count("*").alias("input_count"),
-                    F.sum(F.size("spans")).alias("output_count"),
-                    F.conv(
-                        F.expr("bit_xor(xxhash64(doc_id, to_json(spans)))"),
-                        10,
-                        16,
-                    ).alias("checksum"),
+                span_totals(written, "batch_id")
+                .select(
+                    "partition_id",
+                    F.col("doc_out").alias("input_count"),
+                    "output_count",
+                    "checksum",
                 )
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")

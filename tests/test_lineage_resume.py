@@ -140,3 +140,71 @@ def test_staged_resume_prunes_scans(spark, tmp_path):
         .count()
     )
     assert diff == 0
+
+
+@pytest.mark.parametrize("staged", [False, True], ids=["unstaged", "staged"])
+def test_job_extracts_each_doc_exactly_once(spark, tmp_path, staged):
+    """The extraction UDF runs once per doc per chunk: the lineage is
+    computed from the written output, not by re-running the extraction
+    (the accumulator read 2x N when the lineage write re-executed it)."""
+    from html_to_document_spark.operators import extract_spans as ES
+
+    corpus = generate_corpus(spark, 40, seed=6, giant_frac=0.0)
+    acc = spark.sparkContext.accumulator(0)
+    ES._ROWS_PROCESSED_ACCUMULATOR = acc
+    try:
+        processed = run_with_checkpoint(
+            spark, corpus, str(tmp_path / "spans"), str(tmp_path / "lineage"),
+            n_buckets=N_BUCKETS, chunk_buckets=4,
+            stage_path=str(tmp_path / "staged") if staged else None,
+        )
+    finally:
+        ES._ROWS_PROCESSED_ACCUMULATOR = None
+    assert sorted(processed) == list(range(N_BUCKETS))
+    assert acc.value == 40, (
+        f"extraction UDF processed {acc.value} rows for 40 input docs"
+    )
+
+
+@pytest.mark.parametrize("staged", [False, True], ids=["unstaged", "staged"])
+def test_empty_buckets_commit_zero_rows(spark, tmp_path, staged):
+    """5 docs over 16 buckets: most buckets (and some whole chunks) have
+    no docs, hence no staged and no output directory. The run completes,
+    every bucket commits a lineage row — (b, 0, 0, "0") when empty — and
+    a second call is a no-op."""
+    out_path = str(tmp_path / "spans")
+    lineage_path = str(tmp_path / "lineage")
+    stage_path = str(tmp_path / "staged") if staged else None
+    corpus = generate_corpus(spark, 5, seed=8, giant_frac=0.0)
+
+    first = run_with_checkpoint(
+        spark, corpus, out_path, lineage_path,
+        n_buckets=16, chunk_buckets=4, stage_path=stage_path,
+    )
+    assert sorted(first) == list(range(16))
+
+    expected = extract_spans(corpus)
+    got = spark.read.parquet(out_path)
+    assert got.count() == 5
+    diff = (
+        got.select("doc_id", F.to_json("spans").alias("j"))
+        .exceptAll(expected.select("doc_id", F.to_json("spans").alias("j")))
+        .count()
+    )
+    assert diff == 0
+
+    lineage = spark.read.parquet(lineage_path).collect()
+    assert sorted(r.partition_id for r in lineage) == list(range(16))
+    assert sum(r.input_count for r in lineage) == 5
+    full = {r.partition_id for r in lineage if r.input_count}
+    assert 0 < len(full) <= 5
+    assert all(
+        (r.output_count, r.checksum) == (0, "0")
+        for r in lineage if r.partition_id not in full
+    )
+
+    again = run_with_checkpoint(
+        spark, corpus, out_path, lineage_path,
+        n_buckets=16, chunk_buckets=4, stage_path=stage_path,
+    )
+    assert again == []

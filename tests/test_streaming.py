@@ -55,6 +55,32 @@ def test_sink_retry_is_idempotent(spark, tmp_path):
     assert lin.agg(F.sum("input_count")).first()[0] == 40
 
 
+def test_sink_extracts_each_doc_exactly_once(spark, tmp_path):
+    """The sink's lineage is read back from the written batch partition:
+    a micro-batch is extracted once, not once per write (the accumulator
+    read 2x N when the lineage aggregate re-executed the batch)."""
+    from html_to_document_spark.operators import extract_spans as ES
+    from html_to_document_spark.streaming.stream import make_sink
+
+    out_path = str(tmp_path / "out")
+    lineage = str(tmp_path / "lineage")
+    corpus = generate_corpus(spark, 20, seed=10, giant_frac=0.0)
+    acc = spark.sparkContext.accumulator(0)
+    ES._ROWS_PROCESSED_ACCUMULATOR = acc
+    try:
+        make_sink(out_path, lineage)(extract_spans(corpus), 3)
+    finally:
+        ES._ROWS_PROCESSED_ACCUMULATOR = None
+    assert acc.value == 20, (
+        f"extraction UDF processed {acc.value} rows for 20 input docs"
+    )
+    (row,) = spark.read.parquet(lineage).collect()
+    spans = spark.read.parquet(out_path).agg(F.sum(F.size("spans"))).first()[0]
+    assert (row.partition_id, row.input_count, row.output_count) == (
+        3, 20, spans
+    )
+
+
 def test_streaming_stateful_dedup(spark, tmp_path):
     """applyInPandasWithState exact dedup: first occurrence wins across
     micro-batches; state persists in the checkpoint between runs."""
